@@ -15,7 +15,8 @@ import java.sql.Timestamp
   *
   * Bookmark-advance policy (W3): most streams advance to *run start time*;
   * the analytics stream advances to `max(date_key)` seen
-  * (`tap_hubspot/fetch.py:97,143-146`). Both policies are provided.
+  * (`tap_hubspot/fetch.py:97,143-146`). Run start is
+  * `Orchestrator.runOnce`'s default; max seen is [[advanceToMaxSeen]].
   */
 object Watermark {
 
@@ -27,10 +28,6 @@ object Watermark {
 
   def newerThan(df: DataFrame, tsCol: String, bookmarkIso: String): DataFrame =
     df.filter(col(tsCol) > to_timestamp(lit(bookmarkIso)))
-
-  /** W3 (default policy) — bookmark := run start time, captured on the
-    * driver before the sync, independent of data seen. */
-  def advanceToRunStart(runStart: Timestamp): Timestamp = runStart
 
   /** W3 (analytics policy) — bookmark := max event time in the batch.
     * A single `max` aggregate: map-side partial agg, one tiny shuffle.

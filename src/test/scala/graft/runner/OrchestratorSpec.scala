@@ -39,6 +39,26 @@ class OrchestratorSpec extends SparkSpec {
     assert(s2.get("sys.events") == s1.get("sys.events")) // unchanged on empty
   }
 
+  test("runOnce default policy advances the bookmark to run start, " +
+      "independent of the data seen (W3)") {
+    val job = Orchestrator.StreamJob("events", "ts",
+      extract = (_, _) => events, sink = _ => ())
+    assert(!job.advanceToMaxSeen)
+    val p = Orchestrator.Pipeline("sys", Seq(job))
+    def bracketed(state: Bookmarks): Bookmarks = {
+      val before = java.time.Instant.now()
+      val s = Orchestrator.runOnce(spark, Seq(p), state)
+      val after = java.time.Instant.now()
+      val bk = java.time.Instant.parse(s.get("sys.events").get)
+      assert(!bk.isBefore(before) && !bk.isAfter(after))
+      s
+    }
+    val s1 = bracketed(Bookmarks.empty) // not the batch max (2024-01-20)
+    Thread.sleep(5)
+    val s2 = bracketed(s1) // advances again though nothing new was seen
+    assert(s2.get("sys.events") != s1.get("sys.events"))
+  }
+
   test("catalog round-trip drives selection: discover, patch, sync only selected") {
     var synced: Seq[String] = Nil
     def job(n: String) = Orchestrator.StreamJob(n, "ts",
